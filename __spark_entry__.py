@@ -61,6 +61,7 @@ belongs to the harness that owns the CORRECTNESS artifacts.
 from __future__ import annotations
 
 import ast
+import functools
 import glob
 import json
 import os
@@ -99,6 +100,58 @@ def _pkg_file(mod: str, root: str) -> str | None:
     return None
 
 
+@functools.lru_cache(maxsize=None)
+def _parse(src: str) -> ast.Module:
+    """``ast.parse`` memoized on the source text.  One staleness pass
+    reaches the same plan and engine files from every query's closure;
+    the trees are only read (``_dump`` strips a deep copy).
+    ``_stale_queries`` clears the memos before and after each pass."""
+    return ast.parse(src)
+
+
+@functools.lru_cache(maxsize=None)
+def _file_imports(
+    src: str, mod: str, path: str, root: str
+) -> tuple[tuple[str, ...], tuple[tuple[str, str], ...]]:
+    """Package modules imported by module ``mod`` (source ``src``, file
+    ``path``) and the (module, symbol name) pairs it imports from them,
+    "*" for whole-module imports."""
+    targets: list[str] = []
+    refs: list[tuple[str, str]] = []
+    for node in ast.walk(_parse(src)):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.startswith(_PKG):
+                    targets.append(a.name)
+                    refs.append((a.name, "*"))  # module-object usage: untrackable
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parts = mod.split(".")
+                if not path.endswith("__init__.py"):
+                    parts = parts[:-1]
+                parts = parts[: len(parts) - (node.level - 1)]
+                base = ".".join(parts + ([base] if base else []))
+            if base.startswith(_PKG):
+                targets.append(base)
+                for a in node.names:
+                    sub = f"{base}.{a.name}"
+                    if a.name == "*":
+                        refs.append((base, "*"))
+                    elif _pkg_file(sub, root):
+                        # `from pkg.plans import quality` submodule pull
+                        targets.append(sub)
+                        refs.append((sub, "*"))
+                    else:
+                        refs.append((base, a.name))
+    return tuple(targets), tuple(refs)
+
+
+def _clear_memos() -> None:
+    for memo in (_parse, _file_imports, _import_map):
+        memo.cache_clear()
+
+
 def _import_closure(
     mod: str,
     root: str,
@@ -122,41 +175,12 @@ def _import_closure(
     files = {path}
     try:
         with open(os.path.join(root, path)) as f:
-            tree = ast.parse(f.read())
+            targets, refs = _file_imports(f.read(), mod, path, root)
     except (OSError, SyntaxError):
         return files
-    targets: list[str] = []
-
-    def _edge(target: str, name: str) -> None:
-        if edges is not None:
+    if edges is not None:
+        for target, name in refs:
             edges.setdefault(target, set()).add(name)
-
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            for a in node.names:
-                if a.name.startswith(_PKG):
-                    targets.append(a.name)
-                    _edge(a.name, "*")  # module-object usage: untrackable
-        elif isinstance(node, ast.ImportFrom):
-            base = node.module or ""
-            if node.level:
-                parts = mod.split(".")
-                if not path.endswith("__init__.py"):
-                    parts = parts[:-1]
-                parts = parts[: len(parts) - (node.level - 1)]
-                base = ".".join(parts + ([base] if base else []))
-            if base.startswith(_PKG):
-                targets.append(base)
-                for a in node.names:
-                    sub = f"{base}.{a.name}"
-                    if a.name == "*":
-                        _edge(base, "*")
-                    elif _pkg_file(sub, root):
-                        # `from pkg.plans import quality` submodule pull
-                        targets.append(sub)
-                        _edge(sub, "*")
-                    else:
-                        _edge(base, a.name)
     for t in targets:
         files |= _import_closure(t, root, seen, edges)
     return files
@@ -355,7 +379,7 @@ def _fn_fingerprint(
     when given, ClassDefs in the reachable set are fingerprinted at
     method granularity (see :func:`_class_fingerprint`)."""
     try:
-        tree = ast.parse(src)
+        tree = _parse(src)
     except SyntaxError:
         return None
     defs = _module_defs(tree)
@@ -388,8 +412,10 @@ def _fn_fingerprint(
     return "\n".join(parts + sorted(imports))
 
 
+@functools.lru_cache(maxsize=None)
 def _import_map(tree: ast.Module, mod: str, mod_path: str, root: str) -> dict[str, str]:
-    """Local binding name → package module it came from."""
+    """Local binding name → package module it came from (memoized per
+    tree: read-only, like the trees ``_parse`` shares)."""
     imap: dict[str, str] = {}
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
@@ -423,7 +449,7 @@ def _fn_deep_files(
     the function can't be located (caller goes conservative)."""
     mod_path = _pkg_file(mod, root) or ""
     try:
-        tree = ast.parse(src)
+        tree = _parse(src)
     except SyntaxError:
         return None
     reach = _reachable_names(_module_defs(tree), fn_name)
@@ -492,7 +518,7 @@ def _closure_attrs(
         if p not in cache:
             try:
                 with open(os.path.join(root, p)) as f:
-                    tree = ast.parse(f.read())
+                    tree = _parse(f.read())
             except (OSError, SyntaxError):
                 cache[p] = None
             else:
@@ -562,6 +588,7 @@ def _stale_queries(names: list[str], last_green: dict[str, int], root: str) -> l
     still applies)."""
     from rabbit_in_a_blender_spark.plans import catalog
 
+    _clear_memos()
     commits: dict[int, str | None] = {}
     changed: dict[int, set[str] | None] = {}
     cur_src: dict[str, str | None] = {}
@@ -621,6 +648,7 @@ def _stale_queries(names: list[str], last_green: dict[str, int], root: str) -> l
             fp_new = _fn_fingerprint(new, fn.__name__, attrs)
             if fp_old is None or fp_new is None or fp_old != fp_new:
                 stale.append(n)
+    _clear_memos()  # the trees are not needed past the pass
     return stale
 
 

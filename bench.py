@@ -2,11 +2,13 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 ``--ab <git-ref> [--queries a,b] [--rounds N]`` switches to interleaved
-A/B mode: the ref tree (git archive) and HEAD alternate full suite
-passes in ONE session and the RATIO is reported — the recording
+A/B mode: the ref tree (git archive) and HEAD alternate full passes
+over the rows in ONE session and the RATIO is reported — the recording
 protocol for adjudicating wall-time drift vs real regression
 (VERDICT r5 task 8; this host ambiently drifts 1.1-1.4x between
-rounds).
+rounds).  A row is any catalog query or one of the two ETL rows
+(``etl_pipeline_two_stage``, ``etl_pipeline_bucketed``); each tree
+times its rows with its own code.
 
 Output contract (VERDICT r3 task 1 — the r3 record failed driver-side
 parsing because the single line outgrew the tail capture): the verbose
@@ -31,11 +33,16 @@ variance bar to adjudicate).
 
 from __future__ import annotations
 
+import contextlib
 import glob
+import importlib.util
 import json
 import os
 import re
+import shutil
+import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -153,9 +160,6 @@ def etl_pipeline_bench(
     status-store step tally is a diagnostic, and the bench times the
     production data path — the r5 A/B adjudication of the r4 +15%
     delta (PLANS.md round-5 notes) is why the flag exists."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from rabbit_in_a_blender_spark.core.registry import (
@@ -237,6 +241,19 @@ def etl_pipeline_bench(
     return elapsed, n_rows
 
 
+# The two ETL rows: bench row name -> etl_pipeline_bench(bucketed=...).
+# The cluster-I/O path (bucketed swap/upload tables → exchange-free
+# pk-swap join) is expected SLOWER here: at local test scale the
+# saveAsTable catalog round-trips cost more than the one exchange they
+# remove (PLANS.md round-5 adjudication) — recorded so the gap is
+# tracked, not hidden.
+ETL_ROWS = {"etl_pipeline_two_stage": False, "etl_pipeline_bucketed": True}
+
+
+def _median(xs: list[float]) -> float:
+    return sorted(xs)[len(xs) // 2]
+
+
 def _purge_pkg_modules() -> None:
     for mod in list(sys.modules):
         if mod.startswith("rabbit_in_a_blender_spark"):
@@ -254,125 +271,115 @@ def _release_tracked(df) -> None:
             pass
 
 
-def _time_suite(
-    root: str, names: list[str], spark, sf_dir: str
-) -> dict[str, float]:
-    """Import the plans catalog of the tree at ``root`` (isolated: the
-    package modules are purged before AND after, so trees never mix) and
-    run each query once through the noop sink, timed."""
-    import importlib
-
+@contextlib.contextmanager
+def _tree(root: str):
+    """Import the plans catalog and ``bench.py`` of the tree at ``root``
+    in isolation (the package modules are purged before AND after, so
+    trees never mix); yields (catalog queries, the tree's bench module)."""
+    saved = list(sys.path)
     _purge_pkg_modules()
     sys.path.insert(0, root)
     try:
         cat = importlib.import_module("rabbit_in_a_blender_spark.plans.catalog")
-        queries = cat.all_queries()
-        out: dict[str, float] = {}
-        for name in names:
-            t0 = time.perf_counter()
-            df = queries[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            out[name] = round(time.perf_counter() - t0, 3)
-            _release_tracked(df)
-        return out
+        spec = importlib.util.spec_from_file_location(
+            f"_bench_tree_{abs(hash(root))}", os.path.join(root, "bench.py")
+        )
+        tree_bench = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(tree_bench)
+        yield cat.all_queries(), tree_bench
     finally:
-        sys.path.remove(root)
+        sys.path[:] = saved
         _purge_pkg_modules()
+
+
+def _time_suite(root: str, names: list[str], spark, sf_dir: str) -> dict[str, float]:
+    """Run each row once in the tree at ``root``, timed: a catalog query
+    through the noop sink, an ETL row through the tree's own
+    ``etl_pipeline_bench``."""
+    out: dict[str, float] = {}
+    with _tree(root) as (queries, tree_bench):
+        for name in names:
+            if name in ETL_ROWS:
+                sec, _ = tree_bench.etl_pipeline_bench(spark, sf_dir, bucketed=ETL_ROWS[name])
+            else:
+                t0 = time.perf_counter()
+                df = queries[name](spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                sec = time.perf_counter() - t0
+                _release_tracked(df)
+            out[name] = round(sec, 3)
+    return out
 
 
 def ab_main(ref: str, only: list[str] | None, rounds: int) -> None:
-    """Interleaved A/B: HEAD tree vs ``git archive <ref>`` in ONE Spark
-    session, alternating full suite passes (ref, head, ref, head, ...)
-    so ambient host drift hits both sides equally.  Ratios, not
-    absolutes, are the recorded signal — this is the bench protocol
-    hardening from VERDICT r5 task 8 (three rounds of 1.1-1.4x
-    wall-time drift between rounds on unchanged code).
-    """
-    import shutil
-    import subprocess
-    import tempfile
-
-    here = os.path.dirname(os.path.abspath(__file__))
+    """``--ab``: print the interleaved A/B of ``only`` (default the
+    headline rows; the ETL rows may be named too) as one JSON line."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = only or [n for n in HEADLINE]
-    refdir = tempfile.mkdtemp(prefix=f"bench_ab_{re.sub(r'[^A-Za-z0-9]', '_', ref)}_")
-    try:
-        tar = subprocess.run(
-            ["git", "archive", ref], cwd=here, capture_output=True, timeout=120
-        )
-        if tar.returncode != 0:
-            sys.exit(f"git archive {ref} failed: {tar.stderr.decode()[:500]}")
-        subprocess.run(
-            ["tar", "-x", "-C", refdir], input=tar.stdout, check=True, timeout=120
-        )
-        spark = get_spark("bench-ab")
-        spark.sparkContext.setLogLevel("ERROR")
-        spark.range(1000).count()
-        # Queries present in both trees only (a new query has no ref side).
-        ref_names = set(
-            _ab_catalog_names(refdir)
-        )
-        missing = [n for n in names if n not in ref_names]
-        names = [n for n in names if n in ref_names]
-        # one untimed warmup pass per tree (codegen + footer reads)
-        _time_suite(refdir, names, spark, sf_dir)
-        _time_suite(here, names, spark, sf_dir)
-        ref_reps: dict[str, list[float]] = {n: [] for n in names}
-        head_reps: dict[str, list[float]] = {n: [] for n in names}
-        for _ in range(rounds):
-            for t in _time_suite(refdir, names, spark, sf_dir).items():
-                ref_reps[t[0]].append(t[1])
-            for t in _time_suite(here, names, spark, sf_dir).items():
-                head_reps[t[0]].append(t[1])
-        med = lambda xs: sorted(xs)[len(xs) // 2]
-        per_query = {
+    spark = get_spark("bench-ab")
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.range(1000).count()
+    ref_reps, head_reps, skipped = _interleave(
+        ref, only or HEADLINE, spark, sf_dir, rounds
+    )
+    total_ref = round(sum(_median(v) for v in ref_reps.values()), 3)
+    total_head = round(sum(_median(v) for v in head_reps.values()), 3)
+    print(json.dumps({
+        "metric": "ab_head_over_ref_ratio",
+        "ref": ref,
+        "rounds": rounds,
+        "value": round(total_head / total_ref, 3),
+        "total_head_sec": total_head,
+        "total_ref_sec": total_ref,
+        "queries": {
             n: {
                 "ref": ref_reps[n],
                 "head": head_reps[n],
-                "ratio": round(med(head_reps[n]) / med(ref_reps[n]), 3),
+                "ratio": round(_median(head_reps[n]) / _median(ref_reps[n]), 3),
             }
-            for n in names
-        }
-        total_ref = round(sum(med(ref_reps[n]) for n in names), 3)
-        total_head = round(sum(med(head_reps[n]) for n in names), 3)
-        print(
-            json.dumps(
-                {
-                    "metric": "ab_head_over_ref_ratio",
-                    "ref": ref,
-                    "rounds": rounds,
-                    "value": round(total_head / total_ref, 3),
-                    "total_head_sec": total_head,
-                    "total_ref_sec": total_ref,
-                    "queries": per_query,
-                    "skipped_not_in_ref": missing,
-                    "sf_dir": sf_dir,
-                }
-            )
-        )
+            for n in ref_reps
+        },
+        "skipped_not_in_ref": skipped,
+        "sf_dir": sf_dir,
+    }))
+
+
+def _interleave(ref: str, names: list[str], spark, sf_dir: str, rounds: int):
+    """Interleaved A/B: HEAD tree vs ``git archive <ref>`` in ONE Spark
+    session.  The ref tree is extracted once, each tree gets one untimed
+    warmup pass (codegen, footer reads, committer paths), then ref and
+    head passes alternate so ambient host drift hits both sides equally;
+    ratios, not absolutes, are the recorded signal (VERDICT r5 task 8:
+    1.1-1.4x wall-time drift between rounds on unchanged code).
+
+    Returns ({row: ref reps}, {row: head reps}, rows the ref tree
+    cannot time)."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    refdir = tempfile.mkdtemp(prefix=f"bench_ab_{re.sub(r'[^A-Za-z0-9]', '_', ref)}_")
+    try:
+        tar = subprocess.run(["git", "archive", ref], cwd=here, capture_output=True, timeout=120)
+        if tar.returncode != 0:
+            raise RuntimeError(f"git archive {ref} failed: {tar.stderr.decode()[:500]}")
+        subprocess.run(["tar", "-x", "-C", refdir], input=tar.stdout, check=True, timeout=120)
+        with _tree(refdir) as (queries, tree_bench):
+            has_etl = hasattr(tree_bench, "etl_pipeline_bench")
+            known = set(queries) | (set(ETL_ROWS) if has_etl else set())
+        skipped = [n for n in names if n not in known]
+        names = [n for n in names if n in known]
+        reps = {root: {n: [] for n in names} for root in (refdir, here)}
+        for root in reps:
+            _time_suite(root, names, spark, sf_dir)
+        for _ in range(rounds):
+            for root, side in reps.items():
+                for n, s in _time_suite(root, names, spark, sf_dir).items():
+                    side[n].append(s)
+        return reps[refdir], reps[here], skipped
     finally:
         shutil.rmtree(refdir, ignore_errors=True)
-
-
-def _ab_catalog_names(root: str) -> list[str]:
-    import importlib
-
-    _purge_pkg_modules()
-    sys.path.insert(0, root)
-    try:
-        cat = importlib.import_module("rabbit_in_a_blender_spark.plans.catalog")
-        return list(cat.all_queries())
-    finally:
-        sys.path.remove(root)
-        _purge_pkg_modules()
 
 
 def _latest_round_marker() -> str | None:
     """Commit that recorded the most recent BENCH_r{N}.json — the
     previous round's closing tree, the natural A/B reference."""
-    import glob
-    import subprocess
-
     here = os.path.dirname(os.path.abspath(__file__))
     markers = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
     if not markers:
@@ -390,58 +397,36 @@ def _quick_ab(ref: str, spark, sf_dir: str, rounds: int = 2) -> dict | None:
     """Interleaved HEAD-vs-ref headline passes appended to the normal
     bench record, so every BENCH_r{N} carries its own drift adjudication
     (VERDICT r5 task 8): cross-round comparisons read the RATIO, not the
-    absolute totals this host drifts by 1.1-1.4x."""
-    import shutil
-    import subprocess
-    import tempfile
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    refdir = tempfile.mkdtemp(prefix="bench_ab_auto_")
+    absolute totals this host drifts by 1.1-1.4x.  Any failure yields
+    None."""
     try:
-        tar = subprocess.run(
-            ["git", "archive", ref], cwd=here, capture_output=True, timeout=120
-        )
-        if tar.returncode != 0:
-            return None
-        subprocess.run(
-            ["tar", "-x", "-C", refdir], input=tar.stdout, check=True, timeout=120
-        )
-        names = [n for n in HEADLINE if n in set(_ab_catalog_names(refdir))]
-        if not names:
-            return None
-        _time_suite(refdir, names, spark, sf_dir)  # ref-side warmup
-        ref_reps: dict[str, list[float]] = {n: [] for n in names}
-        head_reps: dict[str, list[float]] = {n: [] for n in names}
-        for _ in range(rounds):
-            for n, s in _time_suite(refdir, names, spark, sf_dir).items():
-                ref_reps[n].append(s)
-            for n, s in _time_suite(here, names, spark, sf_dir).items():
-                head_reps[n].append(s)
-        ref_tot = sum(sum(v) for v in ref_reps.values())
-        head_tot = sum(sum(v) for v in head_reps.values())
-        med = lambda xs: sorted(xs)[len(xs) // 2]
-        return {
-            "ref": ref[:9],
-            "rounds": rounds,
-            "n_queries": len(names),
-            "total_ref_sec": round(ref_tot, 3),
-            "total_head_sec": round(head_tot, 3),
-            "head_over_ref": round(head_tot / ref_tot, 3),
-            # per-query medians so a single-query drift is adjudicable
-            # from the committed artifact alone (VERDICT r8 task 2)
-            "queries": {
-                n: {
-                    "ref": med(ref_reps[n]),
-                    "head": med(head_reps[n]),
-                    "ratio": round(med(head_reps[n]) / max(med(ref_reps[n]), 1e-9), 3),
-                }
-                for n in names
-            },
-        }
+        ref_reps, head_reps, _ = _interleave(ref, HEADLINE, spark, sf_dir, rounds)
     except Exception:
         return None
-    finally:
-        shutil.rmtree(refdir, ignore_errors=True)
+    if not ref_reps:
+        return None
+    ref_tot = sum(sum(v) for v in ref_reps.values())
+    head_tot = sum(sum(v) for v in head_reps.values())
+    return {
+        "ref": ref[:9],
+        "rounds": rounds,
+        "n_queries": len(ref_reps),
+        "total_ref_sec": round(ref_tot, 3),
+        "total_head_sec": round(head_tot, 3),
+        "head_over_ref": round(head_tot / ref_tot, 3),
+        # per-query medians so a single-query drift is adjudicable
+        # from the committed artifact alone (VERDICT r8 task 2)
+        "queries": {
+            n: {
+                "ref": _median(ref_reps[n]),
+                "head": _median(head_reps[n]),
+                "ratio": round(
+                    _median(head_reps[n]) / max(_median(ref_reps[n]), 1e-9), 3
+                ),
+            }
+            for n in ref_reps
+        },
+    }
 
 
 def main() -> None:
@@ -473,22 +458,16 @@ def main() -> None:
         _release_tracked(df)
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    timings: dict[str, float] = {}
     queries_reps: dict[str, list[float]] = {}
-    spread_pct: dict[str, float] = {}
     for name in HEADLINE + NON_HEADLINE:
         fn = queries[name]
-        samples: list[float] = []
+        samples = queries_reps[name] = []
         for _ in range(reps):
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 3))
             _release_tracked(df)
-        med = sorted(samples)[len(samples) // 2]
-        timings[name] = med
-        queries_reps[name] = samples
-        spread_pct[name] = round(100.0 * (max(samples) - min(samples)) / med, 1)
 
     # ETL warmup at the smallest sf: codegen + committer paths compile
     # once here, so the timed run below measures steady-state execution
@@ -496,25 +475,16 @@ def main() -> None:
     etl_pipeline_bench(spark, "/root/testdata/sf0.001")
     etl_pipeline_bench(spark, "/root/testdata/sf0.001", bucketed=True)
     etl_rows = 0
-    for key, bucketed in (
-        ("etl_pipeline_two_stage", False),
-        # The cluster-I/O path (bucketed swap/upload tables → exchange-
-        # free pk-swap join) is expected SLOWER here: at local test
-        # scale the saveAsTable catalog round-trips cost more than the
-        # one exchange they remove (PLANS.md round-5 adjudication) —
-        # recorded so the gap is tracked, not hidden.
-        ("etl_pipeline_bucketed", True),
-    ):
-        etl_samples: list[float] = []
+    for key, bucketed in ETL_ROWS.items():
+        samples = queries_reps[key] = []
         for _ in range(reps):
             etl_sec, etl_rows = etl_pipeline_bench(spark, sf_dir, bucketed=bucketed)
-            etl_samples.append(round(etl_sec, 3))
-        etl_med = sorted(etl_samples)[len(etl_samples) // 2]
-        timings[key] = etl_med
-        queries_reps[key] = etl_samples
-        spread_pct[key] = round(
-            100.0 * (max(etl_samples) - min(etl_samples)) / etl_med, 1
-        )
+            samples.append(round(etl_sec, 3))
+    timings = {k: _median(v) for k, v in queries_reps.items()}
+    spread_pct = {
+        k: round(100.0 * (max(v) - min(v)) / timings[k], 1)
+        for k, v in queries_reps.items()
+    }
     etl_med = timings["etl_pipeline_two_stage"]
 
     # The sweep's wall-time moves with its coverage (r3: +45% wall,
@@ -626,17 +596,11 @@ def main() -> None:
 
 
 if __name__ == "__main__":
+    def _opt(flag: str, default: str | None) -> str | None:
+        return sys.argv[sys.argv.index(flag) + 1] if flag in sys.argv else default
+
     if "--ab" in sys.argv:
-        i = sys.argv.index("--ab")
-        ab_ref = sys.argv[i + 1]
-        ab_only = None
-        if "--queries" in sys.argv:
-            ab_only = sys.argv[sys.argv.index("--queries") + 1].split(",")
-        ab_rounds = int(
-            sys.argv[sys.argv.index("--rounds") + 1]
-            if "--rounds" in sys.argv
-            else 3
-        )
-        ab_main(ab_ref, ab_only, ab_rounds)
+        ab_only = _opt("--queries", None)
+        ab_main(_opt("--ab", None), ab_only and ab_only.split(","), int(_opt("--rounds", "3")))
     else:
         main()

@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 
 from .core.registry import SchemaRegistry, TableSpec
 from .mapping.usagi import read_usagi_csv
-from .pipeline.etl import TableInputs
+from .pipeline.etl import EtlError, TableInputs
 from .quality.dqd_sweep import FK_DOMAINS
 
 CUSTOM_CONCEPT_HEADER = (
@@ -110,6 +110,12 @@ def create_cdm_folders(root: str, registry: SchemaRegistry) -> list[str]:
     return created
 
 
+def _upload_files(tdir: str) -> list[str]:
+    """The upload queries of one table folder (sample files skipped)."""
+    names = sorted(os.listdir(tdir)) if os.path.isdir(tdir) else []
+    return [fn for fn in names if fn.endswith(".sql") and fn != "example.sql"]
+
+
 def load_table_inputs(
     spark: SparkSession,
     root: str,
@@ -128,15 +134,27 @@ def load_table_inputs(
     from pyspark.sql import DataFrame
 
     tdir = os.path.join(root, spec.name)
-    if not os.path.isdir(tdir):
-        return None
+    # Columns the pipeline joins on: the pk, each event column and its
+    # discriminator, and each FK whose parent has a swap table to remap
+    # through (a self-FK, or a parent with upload queries in this tree).
+    keys = [spec.pk, *[c for pair in spec.event_cols.items() for c in pair]] + [
+        fk for fk, parent in spec.fks.items()
+        if parent == spec.name or _upload_files(os.path.join(root, parent))
+    ]
     uploads = []
-    for fn in sorted(os.listdir(tdir)):
-        if fn.endswith(".sql") and fn != "example.sql":
-            if only_queries and f"{spec.name}/{fn}" not in only_queries:
-                continue
-            with open(os.path.join(tdir, fn), encoding="utf-8") as f:
-                uploads.append(spark.sql(f.read()))
+    for fn in _upload_files(tdir):
+        if only_queries and f"{spec.name}/{fn}" not in only_queries:
+            continue
+        with open(os.path.join(tdir, fn), encoding="utf-8") as f:
+            df = spark.sql(f.read())
+        # df.columns reads the analyzed schema; it starts no job
+        missing = [c for c in keys if c and c not in df.columns]
+        if missing:
+            raise EtlError(
+                f"{spec.name}: upload query {spec.name}/{fn} lacks pipeline "
+                f"column(s) {missing}; select them, NULL-cast if unknown"
+            )
+        uploads.append(df)
     if not uploads:
         return None
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
+from ..core import jobstats
 from ..core.registry import SchemaRegistry, TableSpec
 from ..mapping.swap import apply_fk_swaps, apply_pk_swap, swap_merge
 from ..mapping.usagi import apply_usagi, duplicate_mappings
@@ -58,10 +59,6 @@ class StepMetric:
     output_bytes: int = 0
     shuffle_read_bytes: int = 0
     shuffle_write_bytes: int = 0
-
-    def __iter__(self):
-        # (name, seconds) unpacking kept for existing consumers
-        return iter((self.name, self.seconds))
 
 
 @dataclass
@@ -154,8 +151,8 @@ class EtlPipeline:
                 # launches on THIS thread is attributed to it in the
                 # status store.  (Jobs launched from prefetch pool
                 # threads carry no group and land in the "untracked"
-                # bucket — see _collect_io.)
-                sc.setJobGroup(f"riab:{name}", name, False)
+                # bucket — see core.jobstats.step_io.)
+                sc.setJobGroup(f"{jobstats.STEP_GROUP}{name}", name, False)
             except Exception:  # job-group tagging is best-effort
                 pass
         try:
@@ -168,89 +165,6 @@ class EtlPipeline:
                 except Exception:
                     pass
             self.metrics.append(StepMetric(name, round(time.perf_counter() - t0, 3)))
-
-    def _next_job_id(self) -> int:
-        """Highest job id the status store has seen + 1 (so a later
-        _collect_io only attributes THIS run's jobs)."""
-        try:
-            store = self.spark.sparkContext._jsc.sc().statusStore()
-            jobs = store.jobsList(None)
-            mx = -1
-            for i in range(jobs.size()):
-                mx = max(mx, int(jobs.apply(i).jobId()))
-            return mx + 1
-        except Exception:
-            return 0
-
-    def _collect_io(self, min_job_id: int) -> dict[str, dict[str, int]]:
-        """step name → summed stage I/O metrics from the status store.
-
-        Py4J access to AppStatusStore (the store behind the UI/REST API;
-        populated with spark.ui.enabled=false too).  Every failure
-        degrades to 'no I/O numbers', never to a run failure.
-
-        Known attribution ambiguity (acceptable for a best-effort
-        diagnostic tally): a stage SHARED between jobs of different
-        riab job groups — e.g. a shuffle stage skipped/reused by a
-        later job — maps to whichever group's job the iteration sees
-        last, so its I/O lands wholly in one arbitrary step rather
-        than being split."""
-        try:
-            jsc = self.spark.sparkContext._jsc.sc()
-            jsc.listenerBus().waitUntilEmpty()
-            store = jsc.statusStore()
-            jobs = store.jobsList(None)
-            stage_group: dict[int, str] = {}
-            for i in range(jobs.size()):
-                j = jobs.apply(i)
-                if int(j.jobId()) < min_job_id:
-                    continue
-                grp = j.jobGroup()
-                if not grp.isDefined():
-                    continue
-                g = grp.get()
-                if not g.startswith("riab:"):
-                    continue
-                sids = j.stageIds()
-                for x in range(sids.size()):
-                    stage_group[int(sids.apply(x))] = g[len("riab:"):]
-            dflt = lambda n: getattr(store, f"stageList$default${n}")()
-            stages = store.stageList(None, dflt(2), dflt(3), dflt(4), dflt(5))
-            # last attempt per stage id (retries would double-count)
-            latest: dict[int, object] = {}
-            for i in range(stages.size()):
-                s = stages.apply(i)
-                sid = int(s.stageId())
-                if sid not in latest or int(s.attemptId()) > int(
-                    latest[sid].attemptId()
-                ):
-                    latest[sid] = s
-            agg: dict[str, dict[str, int]] = {}
-            for sid, s in latest.items():
-                g = stage_group.get(sid)
-                if g is None:
-                    continue
-                a = agg.setdefault(
-                    g,
-                    {
-                        "input_rows": 0,
-                        "input_bytes": 0,
-                        "output_rows": 0,
-                        "output_bytes": 0,
-                        "shuffle_read_bytes": 0,
-                        "shuffle_write_bytes": 0,
-                    },
-                )
-                a["input_rows"] += int(s.inputRecords())
-                a["input_bytes"] += int(s.inputBytes())
-                a["output_rows"] += int(s.outputRecords())
-                a["output_bytes"] += int(s.outputBytes())
-                a["shuffle_read_bytes"] += int(s.shuffleReadBytes())
-                a["shuffle_write_bytes"] += int(s.shuffleWriteBytes())
-            return agg
-        except Exception:
-            log.debug("status-store I/O metrics unavailable", exc_info=True)
-            return {}
 
     def _check_usagi_concepts(
         self,
@@ -848,7 +762,14 @@ class EtlPipeline:
         processed: list[str] = []
         prefetched: dict[str, object] = {}
         first_metric = len(self.metrics)
-        min_job_id = self._next_job_id() if self.io_metrics else 0
+        # The I/O tally is best-effort: any status-store failure
+        # degrades to "no I/O numbers", never to a run failure.
+        floor = None
+        if self.io_metrics:
+            try:
+                floor = jobstats.floor(self.spark)
+            except Exception:
+                log.debug("status-store job floor unavailable", exc_info=True)
 
         with ThreadPoolExecutor(max(4, 2 * max_parallel_tables)) as pool:
 
@@ -918,11 +839,16 @@ class EtlPipeline:
         # Attach rows/bytes from the status store to this run's steps
         # (jobs from prefetch pool threads carry no group; their I/O is
         # not attributed to a step — by design, they overlap steps).
-        io = self._collect_io(min_job_id) if self.io_metrics else {}
+        io = {}
+        if floor is not None:
+            try:
+                io = jobstats.step_io(*jobstats.since(self.spark, floor))
+            except Exception:
+                log.debug("status-store I/O metrics unavailable", exc_info=True)
         for m in self.metrics[first_metric:]:
             for k, v in io.get(m.name, {}).items():
                 setattr(m, k, v)
-        total = round(sum(s for _, s in self.metrics), 3)
+        total = round(sum(m.seconds for m in self.metrics), 3)
         log.info("ETL run: %.3fs total; steps: %s", total, self.metrics)
         return processed
 

@@ -211,6 +211,8 @@ def stream_dsir_select(
     # directory listing, so replay semantics are unchanged; ≤
     # num_buckets ints per entry, and compact_model's documented
     # quiesced-stream contract means entries never go stale mid-run.
+    # Entries whose file left the listing (compacted away) are dropped,
+    # so the cache never outgrows the live fold files.
     fold_cache: dict[str, list[tuple[int, int]]] = {}
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -245,6 +247,8 @@ def stream_dsir_select(
             if os.path.isdir(model_dir)
             else []
         )
+        for f in set(fold_cache).difference(model_files):
+            del fold_cache[f]
         # Driver-side pyarrow read of the fold files (r13 optimization
         # round, guide §5): the model is ≤ num_buckets aggregate rows
         # per file by contract, but a per-batch spark.read.parquet paid

@@ -159,6 +159,39 @@ def test_load_table_inputs_derives_allowed_domains(env, spark):
     assert inputs.allowed_domains["race_concept_id"] == ["Race"]
 
 
+def test_load_table_inputs_fails_fast_on_missing_pipeline_columns(env, spark):
+    """An upload query that omits a column the pipeline joins on (here
+    the self-FK preceding_visit_occurrence_id) fails at load time with
+    an EtlError naming the table, the .sql file and the column."""
+    from rabbit_in_a_blender_spark.core.cdm54 import cdm54_registry
+    from rabbit_in_a_blender_spark.folders import load_table_inputs
+    from rabbit_in_a_blender_spark.pipeline.etl import EtlError
+
+    spark.createDataFrame(
+        [(10, 1, "IP")], "enc_id int, pat_id int, enc_type string"
+    ).createOrReplaceTempView("encounter_raw")
+    vdir = os.path.join(env["etl_dir"], "visit_occurrence")
+    os.makedirs(vdir)
+    select = (
+        "SELECT CAST(enc_id AS STRING) AS visit_occurrence_id, "
+        "CAST(pat_id AS STRING) AS person_id, "
+        "enc_type AS visit_concept_id__source{} FROM encounter_raw"
+    )
+    with open(os.path.join(vdir, "load.sql"), "w") as f:
+        f.write(select.format(""))
+    spec = cdm54_registry()["visit_occurrence"]
+    with pytest.raises(EtlError) as e:
+        load_table_inputs(spark, env["etl_dir"], spec)
+    msg = str(e.value)
+    assert "visit_occurrence/load.sql" in msg
+    assert "['preceding_visit_occurrence_id']" in msg
+    with open(os.path.join(vdir, "load.sql"), "w") as f:
+        f.write(select.format(
+            ", CAST(NULL AS STRING) AS preceding_visit_occurrence_id"
+        ))
+    assert load_table_inputs(spark, env["etl_dir"], spec) is not None
+
+
 def test_import_vocabularies(env, spark):
     vocab_dir = os.path.join(env["root"], "vocab")
     os.makedirs(vocab_dir)

@@ -484,11 +484,11 @@ def test_usagi_domain_check_raises(spark, wh):
 def test_run_records_step_metrics(spark, wh):
     pipe = EtlPipeline(spark, wh, REGISTRY)
     pipe.run(_inputs(spark))
-    names = [n for n, _ in pipe.metrics]
+    names = [m.name for m in pipe.metrics]
     assert any(n.startswith("stage1:person") for n in names)
     assert any(n.startswith("stage2:note") for n in names)
     assert names[-1] == "invalidate_stale_mappings"
-    assert all(s >= 0 for _, s in pipe.metrics)
+    assert all(m.seconds >= 0 for m in pipe.metrics)
     # rows/bytes accounting (reference cost tally parity,
     # etl/bigquery/gcp.py:106-144): the person stage1 step writes the
     # omop table, so the status store must attribute output rows+bytes
@@ -863,7 +863,7 @@ def test_etl_pointer_mode_seals_a_transaction_per_run(spark, tmp_path):
     assert wh.list_txns() == [1]
     assert "omop/person" in wh.snapshot()
     assert wh.read_snapshot(spark, "omop", "person").count() == 20
-    assert any(name == "seal_transaction" for name, _ in pipe.metrics)
+    assert any(m.name == "seal_transaction" for m in pipe.metrics)
 
     pipe.run({"person": TableInputs(uploads=[upload(7)])})
     assert wh.list_txns() == [1, 2]

@@ -116,6 +116,8 @@ def test_stateful_running_counts(spark):
 
         deadline = _time.time() + 120
         while _time.time() < deadline:
+            if q.exception() is not None:
+                raise q.exception()
             seen = (
                 spark.table("riab_stateful_test")
                 .groupBy("user_id")
@@ -803,6 +805,66 @@ def test_stream_dsir_select_folds_history_across_batches(spark):
             spark.read.parquet(f"{tmp}/model").agg(F.sum("cnt")).first()[0]
         )
         assert mass2 == mass
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_stream_dsir_fold_cache_bounded_by_live_files(spark, monkeypatch):
+    """The DSIR sink's fold-file cache drops entries whose file left the
+    model listing: after compact_model folds the per-batch files into
+    one, the next batch leaves at most one entry per live fold file.
+    The sink is driven batch by batch, without a streaming query."""
+    import os
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from rabbit_in_a_blender_spark.ext.dsir import compact_model, dsir_model_counts
+    from rabbit_in_a_blender_spark.streaming.sink import stream_dsir_select
+
+    captured = {}
+
+    def capture(self, fn):
+        captured["sink"] = fn
+        return self
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", capture)
+    schema = "doc_id long, text string"
+    target = spark.createDataFrame([(0, "alpha beta gamma")], schema)
+    tmp = tempfile.mkdtemp(prefix="riab_sdsir_cache_")
+    model_dir = f"{tmp}/model"
+    try:
+        stream_dsir_select(
+            spark.readStream.schema(schema).parquet(tmp),
+            out_dir=f"{tmp}/out",
+            model_dir=model_dir,
+            checkpoint_dir=f"{tmp}/ckpt",
+            target_model=dsir_model_counts(target, "doc_id", "text", num_buckets=32),
+            num_buckets=32,
+        )
+        sink = captured["sink"]
+        cells = dict(zip(sink.__code__.co_freevars, sink.__closure__))
+        fold_cache = cells["fold_cache"].cell_contents
+
+        def live():
+            return {
+                os.path.join(model_dir, f)
+                for f in os.listdir(model_dir)
+                if f.endswith(".parquet")
+            }
+
+        def batch(b):
+            return spark.createDataFrame(
+                [(10 * b + i, f"alpha delta w{b}{i}") for i in range(3)], schema
+            )
+
+        for b in range(2):
+            sink(batch(b), b)
+            assert set(fold_cache) <= live()
+        assert len(fold_cache) == 1  # batch 1 read batch 0's fold
+        compact_model(spark, model_dir)
+        sink(batch(2), 2)
+        assert set(fold_cache) <= live()
+        assert len(fold_cache) <= len(live()) - 1  # batch 2's own fold is unread
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -1,16 +1,11 @@
-"""Per-job profile of one or more catalog queries (r13 optimization).
+"""Per-job profile of catalog queries: a thin CLI over ``core.jobstats``.
 
 Usage: python tools/profile_query.py q1_pricing_summary ext_semantic_dedup ...
 
-For each query: one untimed warmup pass (codegen + parquet footers),
-then a timed pass through the noop sink; afterwards every Spark job the
-timed pass launched is listed from the AppStatusStore (job id, wall ms,
-#tasks, shuffle read/write bytes, callsite/description) so the wall
-time decomposes into the actual actions — the measurement step of
-guide §1 when the UI is disabled.
-
-Timing methodology matches bench.py (noop sink, steady-state pass);
-this tool is diagnostic only and never runs under the driver.
+Each query gets an untimed warmup pass, then a timed pass through the
+noop sink (as in bench.py); every job the timed pass launched is listed
+(id, wall s, tasks, input and shuffle read/write bytes, description) so
+the wall time decomposes into its actions.
 """
 
 from __future__ import annotations
@@ -21,64 +16,26 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from rabbit_in_a_blender_spark.core import jobstats
+from rabbit_in_a_blender_spark.core.caching import unpersist_intermediates
 from rabbit_in_a_blender_spark.core.session import get_spark
 
 
-def _jobs_since(spark, min_job_id: int):
-    jsc = spark.sparkContext._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    store = jsc.statusStore()
-    jobs = store.jobsList(None)
-    out = []
-    stage_meta = {}
-    dflt = lambda n: getattr(store, f"stageList$default${n}")()
-    stages = store.stageList(None, dflt(2), dflt(3), dflt(4), dflt(5))
-    for i in range(stages.size()):
-        s = stages.apply(i)
-        stage_meta[int(s.stageId())] = (
-            int(s.numCompleteTasks()),
-            int(s.shuffleReadBytes()),
-            int(s.shuffleWriteBytes()),
-            int(s.inputBytes()),
+def _job_rows(jobs: list[dict], stages: list[dict]):
+    """(id, wall s, tasks, input B, shuffle read B, shuffle write B,
+    description) per job, oldest first; wall is -1 while a job runs."""
+    by_id = {s["stageId"]: s for s in stages}
+    for j in sorted(jobs, key=lambda j: j["jobId"]):
+        st = [by_id[i] for i in j["stageIds"] if i in by_id]
+        sub, comp = j.get("submissionTime"), j.get("completionTime")
+        yield (
+            j["jobId"],
+            (comp - sub) / 1e3 if sub is not None and comp is not None else -1.0,
+            *(sum(s[k] for s in st) for k in (
+                "numCompleteTasks", "inputBytes", "shuffleReadBytes", "shuffleWriteBytes"
+            )),
+            str(j.get("description") or j["name"])[:110],
         )
-    for i in range(jobs.size()):
-        j = jobs.apply(i)
-        jid = int(j.jobId())
-        if jid < min_job_id:
-            continue
-        sub = j.submissionTime()
-        comp = j.completionTime()
-        dur = -1.0
-        if sub.isDefined() and comp.isDefined():
-            dur = (
-                comp.get().getTime() - sub.get().getTime()
-            ) / 1000.0
-        ntasks, srd, swr, inp = 0, 0, 0, 0
-        sids = j.stageIds()
-        for x in range(sids.size()):
-            m = stage_meta.get(int(sids.apply(x)))
-            if m:
-                ntasks += m[0]
-                srd += m[1]
-                swr += m[2]
-                inp += m[3]
-        desc = j.description()
-        name = desc.get() if desc.isDefined() else j.name()
-        out.append((jid, dur, ntasks, srd, swr, inp, str(name)[:110]))
-    out.sort()
-    return out
-
-
-def _max_job_id(spark) -> int:
-    try:
-        store = spark.sparkContext._jsc.sc().statusStore()
-        jobs = store.jobsList(None)
-        mx = -1
-        for i in range(jobs.size()):
-            mx = max(mx, int(jobs.apply(i).jobId()))
-        return mx + 1
-    except Exception:
-        return 0
 
 
 def main() -> None:
@@ -91,32 +48,24 @@ def main() -> None:
     queries = all_queries()
     spark.range(1000).count()
 
-    def release(df):
-        for c in getattr(df, "_graft_cached", []):
-            try:
-                c.unpersist()
-            except Exception:
-                pass
-
     for name in names:
         fn = queries[name]
-        # warmup
-        df = fn(spark, sf_dir)
+        df = fn(spark, sf_dir)  # warmup
         df.write.format("noop").mode("overwrite").save()
-        release(df)
-        floor = _max_job_id(spark)
+        unpersist_intermediates(df)
+        floor = jobstats.floor(spark)
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         t_build = time.perf_counter() - t0
         df.write.format("noop").mode("overwrite").save()
         t_total = time.perf_counter() - t0
-        release(df)
-        jobs = _jobs_since(spark, floor)
+        unpersist_intermediates(df)
+        jobs = list(_job_rows(*jobstats.since(spark, floor)))
         jsum = sum(d for _, d, *_ in jobs if d > 0)
         print(f"\n=== {name}: total {t_total:.3f}s (plan-build {t_build:.3f}s, "
               f"{len(jobs)} jobs, job-sum {jsum:.3f}s, "
               f"gap {t_total - jsum:.3f}s) ===")
-        for jid, dur, ntasks, srd, swr, inp, desc in jobs:
+        for jid, dur, ntasks, inp, srd, swr, desc in jobs:
             print(f"  job {jid:>5} {dur:8.3f}s tasks={ntasks:<5} "
                   f"in={inp/1e6:8.2f}MB srd={srd/1e6:7.2f}MB "
                   f"swr={swr/1e6:7.2f}MB  {desc}")
